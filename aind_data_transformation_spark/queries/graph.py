@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.stages import Stage
 
 SCALE = 1_000_000_000_000
 ROUNDS = 8
@@ -249,13 +250,8 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_ROUNDS = 3
 
 
-#: shared co-purchase support cache: (applicationId, sf_dir) -> the
-#: materialized (u, v, n_orders) support table. See
-#: :func:`_copurchase_support`. Same lifecycle discipline as
-#: llm_vectors._LLOYD_CACHE: checkpointed frames are valid only for the
-#: owning SparkSession, so entries from dead sessions are evicted on
-#: insert.
-_COPURCHASE_CACHE: dict = {}
+#: shared co-purchase support table; see :func:`_copurchase_support`.
+_COPURCHASE_CACHE = Stage("copurchase_support")
 
 
 def _copurchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,33 +268,29 @@ def _copurchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a narrow map/union over this one frame."""
     from aind_data_transformation_spark.ops import local_materializer as mat
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COPURCHASE_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    half = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    def build(_scratch: str) -> DataFrame:
+        li = (
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey")
+            .distinct()
         )
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
+        a, b = li.alias("a"), li.alias("b")
+        half = (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+            )
+            .groupBy(
+                F.col("a.l_partkey").alias("u"),
+                F.col("b.l_partkey").alias("v"),
+            )
+            .agg(F.count(F.lit(1)).alias("n_orders"))
+            .where(F.col("n_orders") >= 2)
         )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .where(F.col("n_orders") >= 2)
-    )
-    out = mat(half, "copurchase_support")
-    for stale in [x for x in _COPURCHASE_CACHE if x[0] != ck[0]]:
-        del _COPURCHASE_CACHE[stale]
-    _COPURCHASE_CACHE[ck] = out
-    return out
+        return mat(half, "copurchase_support")
+
+    return _COPURCHASE_CACHE.get(spark, (sf_dir,), build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

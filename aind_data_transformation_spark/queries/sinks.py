@@ -30,6 +30,7 @@ from aind_data_transformation_spark.ops import attach_broadcast
 from pyspark.sql import types as T
 
 from aind_data_transformation_spark.io.sources import load_table, read_csv, read_json
+from aind_data_transformation_spark.stages import Stage
 
 
 def _scratch(sf_dir: str, name: str) -> str:
@@ -765,48 +766,40 @@ def q_sink_txlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-staged txlog base-fixture batches: (applicationId, sf_dir) ->
-#: staged dir holding batch-0..batch-3. The four hash-split orders files
-#: are deterministic and IDENTICAL for every txlog key, so the Spark
-#: write job runs once per (session, sf_dir) (the copurchase/ANN-index
-#: staging doctrine) and each key's private table is populated by
-#: hardlinking the immutable parquet files into its own data dir.
+#: session-staged txlog base-fixture batches: batch-0..batch-3. The four
+#: hash-split orders files are deterministic and IDENTICAL for every
+#: txlog key, so the Spark write job runs once per (session, sf_dir)
+#: and each key's private table is populated by hardlinking the
+#: immutable parquet files into its own data dir.
 #: Safe because no txlog mutation ever modifies file CONTENTS — merges/
 #: optimizes write new GUID-named files, removes are logical, vacuum
 #: unlinks the key's own link (the staged inode survives).
-_TXLOG_FIXTURE_STAGE: dict = {}
+_TXLOG_FIXTURE_STAGE = Stage("txlog_fixture")
 
 
 def _txlog_fixture_batches(spark: SparkSession, sf_dir: str) -> str:
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TXLOG_FIXTURE_STAGE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    staged = _scratch(sf_dir, "_txlog_fixture_stage")
-    shutil.rmtree(staged, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    # ONE write job for all four batch files (partitionBy on the hash
-    # bucket, then rename the partition dirs into place — r6 advice:
-    # four sequential filtered writes scanned orders four times).
-    staging = staged + ".tmp"
-    (
-        orders.withColumn("__b", F.pmod("o_orderkey", F.lit(4)))
-        .repartition(4, "__b")
-        .write.partitionBy("__b")
-        .parquet(staging)
-    )
-    os.makedirs(staged, exist_ok=True)
-    for b in range(4):
-        os.rename(
-            os.path.join(staging, f"__b={b}"),
-            os.path.join(staged, f"batch-{b}"),
+    def build(staged: str) -> str:
+        orders = load_table(spark, sf_dir, "orders")
+        # ONE write job for all four batch files (partitionBy on the
+        # hash bucket, then rename the partition dirs into place — r6
+        # advice: four sequential filtered writes scanned orders four
+        # times).
+        staging = os.path.join(staged, "staging")
+        (
+            orders.withColumn("__b", F.pmod("o_orderkey", F.lit(4)))
+            .repartition(4, "__b")
+            .write.partitionBy("__b")
+            .parquet(staging)
         )
-    shutil.rmtree(staging, ignore_errors=True)
-    for stale in [k for k in _TXLOG_FIXTURE_STAGE if k[0] != ck[0]]:
-        shutil.rmtree(_TXLOG_FIXTURE_STAGE[stale], ignore_errors=True)
-        del _TXLOG_FIXTURE_STAGE[stale]
-    _TXLOG_FIXTURE_STAGE[ck] = staged
-    return staged
+        for b in range(4):
+            os.rename(
+                os.path.join(staging, f"__b={b}"),
+                os.path.join(staged, f"batch-{b}"),
+            )
+        shutil.rmtree(staging, ignore_errors=True)
+        return staged
+
+    return _TXLOG_FIXTURE_STAGE.get(spark, (sf_dir,), build)
 
 
 def _link_tree(src: str, dst: str) -> None:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.ops import attach_broadcast
 from aind_data_transformation_spark.queries.numeric import money_sum, sql_money_sum
+from aind_data_transformation_spark.stages import Stage
 
 #: Session gap / watermark delay shared with streaming/jobs.py.
 SESSION_GAP = "30 minutes"
@@ -403,62 +404,56 @@ def q_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: staged 4-chunk source cache: (applicationId, sf_dir) -> the incoming
-#: dir holding the four hash-chunk deliveries (r7 verdict item #3: the
-#: fixture was re-staged — four coalesce(1) write jobs — on EVERY
-#: invocation, ~half the key's bench cost). Same lifecycle discipline as
-#: graph._COPURCHASE_CACHE: entries from dead sessions are evicted on
-#: insert; the staged dir is plain parquet on local disk so it stays
-#: valid for the owning session's lifetime.
-_MINHASH_STAGE_CACHE: dict = {}
-
-
-def _minhash_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the documents table as 4 deterministic hash-chunk files
-    (the micro-batch deliveries) ONCE per (session, sf_dir)."""
-    import os
-    import tempfile
-
+def _stage_chunks(
+    df: DataFrame, chunk, scratch: str, allow_empty: bool = False
+) -> str:
+    """Stage ``df`` as 4 deterministic chunk files (a stream's
+    micro-batch deliveries) under ``<scratch>/incoming`` and return that
+    dir. ONE write job for all 4 chunks (partitionBy on ``chunk``), then
+    each part file moves into place as chunk-<c>.parquet — r7 verdict
+    item #3: 4 sequential coalesce(1) jobs were ~half a key's bench
+    cost. Every chunk must be exactly one file; with ``allow_empty`` an
+    empty chunk has none and is skipped."""
     import glob
+    import os
     import shutil
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MINHASH_STAGE_CACHE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    base = tempfile.mkdtemp(prefix="stream_minhash_src_")
-    src = os.path.join(base, "incoming")
+    src = os.path.join(scratch, "incoming")
+    staging = os.path.join(scratch, "staging")
     os.makedirs(src)
-    # ONE write job for all 4 chunks (partitionBy), then flatten the
-    # part files into the source dir as chunk-<c>.parquet — r7 verdict
-    # item #3: the previous 4 sequential coalesce(1) jobs were ~half
-    # the key's bench cost. Delivery order (lexical by name once mtimes
-    # tie) doesn't matter: the accumulated pair set is order-free and
-    # the oracle is the batch pair set.
-    staging = os.path.join(base, "staging")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     (
-        docs.withColumn("chunk", F.pmod("doc_id", F.lit(4)))
+        df.withColumn("chunk", chunk)
         .repartition(4, "chunk")
         .write.partitionBy("chunk")
         .parquet(staging)
     )
     for c in range(4):
         parts = glob.glob(os.path.join(staging, f"chunk={c}", "part-*"))
-        assert len(parts) == 1, parts
-        os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
+        assert len(parts) == 1 or (allow_empty and not parts), parts
+        if parts:
+            os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
     shutil.rmtree(staging, ignore_errors=True)
-    for stale in [x for x in _MINHASH_STAGE_CACHE if x[0] != ck[0]]:
-        # evicted entries are dead-session mkdtemp scratch — remove the
-        # whole tempdir (the parent of the incoming/ dir) so long-lived
-        # processes don't accumulate orphaned staged data.
-        shutil.rmtree(
-            os.path.dirname(_MINHASH_STAGE_CACHE[stale]),
-            ignore_errors=True,
-        )
-        del _MINHASH_STAGE_CACHE[stale]
-    _MINHASH_STAGE_CACHE[ck] = src
     return src
+
+
+_MINHASH_STAGE_CACHE = Stage("stream_minhash_src")
+
+
+def _minhash_stage(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the documents table as 4 deterministic hash-chunk files
+    (the micro-batch deliveries) ONCE per (session, sf_dir). Delivery
+    order (lexical by name once mtimes tie) doesn't matter: the
+    accumulated pair set is order-free and the oracle is the batch pair
+    set."""
+    return _MINHASH_STAGE_CACHE.get(
+        spark,
+        (sf_dir,),
+        lambda scratch: _stage_chunks(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+            F.pmod("doc_id", F.lit(4)),
+            scratch,
+        ),
+    )
 
 
 def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,48 +492,23 @@ def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sjobs.read_stream_dedup_pairs(spark, f"{base}/pairs")
 
 
-#: staged 4-chunk orders source cache, same lifecycle as
-#: _MINHASH_STAGE_CACHE
-_TXLOG_STAGE_CACHE: dict = {}
+_TXLOG_STAGE_CACHE = Stage("stream_txlog_src")
 
 
 def _txlog_sink_stage(spark: SparkSession, sf_dir: str) -> str:
     """Stage orders as 4 deterministic hash-chunk files (the stream's
     micro-batch deliveries) once per (session, sf_dir)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TXLOG_STAGE_CACHE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    base = tempfile.mkdtemp(prefix="stream_txlog_src_")
-    src = os.path.join(base, "incoming")
-    os.makedirs(src)
-    staging = os.path.join(base, "staging")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
+    return _TXLOG_STAGE_CACHE.get(
+        spark,
+        (sf_dir,),
+        lambda scratch: _stage_chunks(
+            load_table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderstatus", "o_totalprice"
+            ),
+            F.pmod("o_orderkey", F.lit(4)),
+            scratch,
+        ),
     )
-    (
-        orders.withColumn("chunk", F.pmod("o_orderkey", F.lit(4)))
-        .repartition(4, "chunk")
-        .write.partitionBy("chunk")
-        .parquet(staging)
-    )
-    for c in range(4):
-        parts = glob.glob(os.path.join(staging, f"chunk={c}", "part-*"))
-        assert len(parts) == 1, parts
-        os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-    for stale in [x for x in _TXLOG_STAGE_CACHE if x[0] != ck[0]]:
-        shutil.rmtree(
-            os.path.dirname(_TXLOG_STAGE_CACHE[stale]), ignore_errors=True
-        )
-        del _TXLOG_STAGE_CACHE[stale]
-    _TXLOG_STAGE_CACHE[ck] = src
-    return src
 
 
 def q_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,9 +547,7 @@ def q_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sinks._txlog_read(spark, log_dir, as_of=None)
 
 
-#: staged 4-chunk CDC change-set cache, same lifecycle as the other
-#: session caches
-_CDC_STAGE_CACHE: dict = {}
+_CDC_STAGE_CACHE = Stage("stream_txlog_cdc_src")
 
 
 def _cdc_stage(spark: SparkSession, sf_dir: str) -> str:
@@ -587,46 +555,21 @@ def _cdc_stage(spark: SparkSession, sf_dir: str) -> str:
     (the CDC deliveries) once per (session, sf_dir). Chunking on the
     (possibly re-keyed) row key keeps chunks key-disjoint, so applying
     them sequentially equals the one-shot merge."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from aind_data_transformation_spark.queries import sinks as _sinks
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CDC_STAGE_CACHE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    base = tempfile.mkdtemp(prefix="stream_txlog_cdc_src_")
-    src = os.path.join(base, "incoming")
-    os.makedirs(src)
-    staging = os.path.join(base, "staging")
-    changes = _sinks._merge_changes(spark, sf_dir)
     # chunk on key div 4: the change-set's keys live in fixed residues
     # mod 4 (that's how the fixture maps ops to batches), so dividing
     # first spreads every op kind across all four deliveries
-    (
-        changes.withColumn(
-            "chunk", F.pmod(F.expr("o_orderkey div 4"), F.lit(4))
-        )
-        .repartition(4, "chunk")
-        .write.partitionBy("chunk")
-        .parquet(staging)
+    return _CDC_STAGE_CACHE.get(
+        spark,
+        (sf_dir,),
+        lambda scratch: _stage_chunks(
+            _sinks._merge_changes(spark, sf_dir),
+            F.pmod(F.expr("o_orderkey div 4"), F.lit(4)),
+            scratch,
+            allow_empty=True,
+        ),
     )
-    for c in range(4):
-        parts = glob.glob(os.path.join(staging, f"chunk={c}", "part-*"))
-        assert len(parts) <= 1, parts
-        if parts:
-            os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-    for stale in [x for x in _CDC_STAGE_CACHE if x[0] != ck[0]]:
-        shutil.rmtree(
-            os.path.dirname(_CDC_STAGE_CACHE[stale]), ignore_errors=True
-        )
-        del _CDC_STAGE_CACHE[stale]
-    _CDC_STAGE_CACHE[ck] = src
-    return src
 
 
 def q_stream_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
