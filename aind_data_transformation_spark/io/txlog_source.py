@@ -90,12 +90,43 @@ def _checkpoint_dirs(log_dir: str) -> list:
     )
 
 
+#: the action-log schema: every field an action row may carry, with its
+#: arrow type. Checkpoints are written with exactly these columns, and
+#: the engine's replay (`queries/sinks._txlog_log_rows`) fills the ones
+#: a JSON line omits with None.
+_ACTION_FIELDS = (
+    ("commit", "int64"),
+    ("action", "string"),
+    ("path", "string"),
+    ("target", "string"),
+    ("constraint", "string"),
+    ("part", "string"),
+    ("schema", "string"),
+    ("ts", "int64"),
+    ("op", "string"),
+    ("metrics", "string"),
+    ("min_key", "int64"),
+    ("max_key", "int64"),
+    ("part_col", "string"),
+    ("stats_col", "string"),
+    ("bloom", "string"),
+    ("bloom_col", "string"),
+    ("bloom_bits", "int64"),
+    ("stats_json", "string"),
+    ("bytes", "int64"),
+    ("rows", "int64"),
+    ("protocol", "string"),
+    ("tbloom", "string"),
+    ("tbloom_col", "string"),
+    ("tbloom_bits", "int64"),
+)
+
+
 def _log_rows(log_dir: str) -> list:
     """Driver-side log replay input: every action line of every commit
     file (metadata-sized), via stdlib json — no Spark needed, so the
     reader classes stay picklable and executor-safe. Checkpoint-aware:
-    a compacted table replays latest checkpoint parquet + JSON tail,
-    matching queries/sinks._txlog_log_rows."""
+    a compacted table replays latest checkpoint parquet + JSON tail."""
     ckpts = _checkpoint_dirs(log_dir)
     rows = []
     ckpt_version = -1
@@ -116,40 +147,45 @@ def _log_rows(log_dir: str) -> list:
     return rows
 
 
-def _live_files(rows: list, as_of=None) -> list:
-    """Last action per path wins (remove beats add within a commit),
-    matching queries/sinks._txlog_live_from_rows."""
+def _live_adds(rows: list, as_of=None) -> dict:
+    """{live path: its winning add action} at ``as_of`` (None = head) —
+    THE live-set replay of the format: last add/remove action per path
+    wins, with remove beating add within one commit. The winning add
+    carries the per-file metadata (part values, recorded stats) that
+    pruning evaluates against."""
     last: dict = {}
     for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
         if as_of is not None and r["commit"] > as_of:
             continue
         if r["action"] in ("add", "remove") and r.get("path") is not None:
-            last[r["path"]] = r["action"]
-    return sorted(p for p, a in last.items() if a == "add")
+            last[r["path"]] = r
+    return {p: r for p, r in last.items() if r["action"] == "add"}
 
 
-def _incremental_files(rows: list, start: int, end: int) -> list:
-    """Files ADDED in commits (start, end] that are still live at end —
-    the per-batch increment of a log-tailing consumer."""
-    live_at_end = set(_live_files(rows, as_of=end))
-    added = {
-        r["path"]
-        for r in rows
-        if r["action"] == "add"
-        and start < r["commit"] <= end
-        and r.get("path") is not None
-    }
-    return sorted(added & live_at_end)
+def _live_files(rows: list, as_of=None) -> list:
+    """The sorted live file list at ``as_of`` (None = head)."""
+    return sorted(_live_adds(rows, as_of))
+
+
+def _incremental_files(rows: list, start: int, end=None) -> list:
+    """Files ADDED in commits (start, end] that are still live at end
+    (None = head) — the per-batch increment of a log-tailing consumer.
+    A path live at ``end`` was added in the window iff its winning add
+    committed after ``start``."""
+    return sorted(
+        p for p, r in _live_adds(rows, end).items() if r["commit"] > start
+    )
 
 
 def _live_dvs(rows: list, live: list, as_of=None) -> dict:
-    """Deletion-vector applicability from pure log metadata (matching
-    queries/sinks._txlog_live_dvs): sidecar -> its targets, kept only
-    where a target is still live (and, for time travel, only DVs
-    committed at or before ``as_of`` — later deletes must not apply to
-    an earlier snapshot). Returned as {target data dir: [sidecar
-    paths]} so each partition can resolve its own tombstones
-    executor-side."""
+    """Deletion-vector applicability from pure log metadata: {live
+    target data dir: [sidecar paths]}, keeping only DVs whose target is
+    still live (and, for time travel, only DVs committed at or before
+    ``as_of`` — later deletes must not apply to an earlier snapshot),
+    so each partition can resolve its own tombstones executor-side. A
+    later OPTIMIZE that rewrites the targets makes a DV inert without a
+    log edit. A (sidecar, target) pair is listed once however often it
+    was logged, as a checkpoint keeps it once."""
     live_set = set(live)
     by_target: dict = {}
     for r in rows:
@@ -157,16 +193,35 @@ def _live_dvs(rows: list, live: list, as_of=None) -> dict:
             continue
         if r.get("action") == "dv" and r.get("path") is not None:
             t = r.get("target")
-            if t in live_set:
+            if t in live_set and r["path"] not in by_target.get(t, ()):
                 by_target.setdefault(t, []).append(r["path"])
     return by_target
 
 
+def _version_as_of_ts(rows: list, ts: int) -> int:
+    """``AS OF TIMESTAMP`` resolution (microseconds): the latest commit
+    whose commitInfo timestamp is at or before ``ts`` (Delta's rule).
+    Well-defined because `attempt_commit` clamps commit timestamps to
+    be non-decreasing."""
+    cand = [
+        r["commit"]
+        for r in rows
+        if r.get("action") == "commitInfo"
+        and r.get("ts") is not None
+        and r["ts"] <= ts
+    ]
+    if not cand:
+        raise ValueError(
+            f"no commit at or before timestamp {ts}; table history"
+            " begins later"
+        )
+    return max(cand)
+
+
 def _resolve_as_of(rows: list, options) -> "int | None":
     """Time-travel resolution for the reader options: ``version_as_of``
-    (a commit number) or ``timestamp_as_of`` (microseconds, resolved to
-    the latest commit whose commitInfo ts <= t — the same rule as the
-    engine's AS OF TIMESTAMP). None = head."""
+    (a commit number) or ``timestamp_as_of`` (microseconds, resolved by
+    `_version_as_of_ts`). None = head."""
     v = options.get("version_as_of")
     t = options.get("timestamp_as_of")
     if v is not None and t is not None:
@@ -176,20 +231,7 @@ def _resolve_as_of(rows: list, options) -> "int | None":
     if v is not None:
         return int(v)
     if t is not None:
-        ts = int(t)
-        cand = [
-            r["commit"]
-            for r in rows
-            if r.get("action") == "commitInfo"
-            and r.get("ts") is not None
-            and r["ts"] <= ts
-        ]
-        if not cand:
-            raise ValueError(
-                f"no commit at or before timestamp {ts}; table history"
-                " begins later"
-            )
-        return max(cand)
+        return _version_as_of_ts(rows, int(t))
     return None
 
 
@@ -570,9 +612,8 @@ class TxlogProtocolError(RuntimeError):
 
 
 def _row_get(r, k, default=None):
-    """Tolerant field access across the two row shapes log replay
-    yields: stdlib dicts (connector `_log_rows`) and pyspark Rows
-    (the engine's `_txlog_log_rows`), which have no ``.get``."""
+    """Tolerant field access over replayed action rows: a field absent
+    from the row or recorded as None reads as ``default``."""
     try:
         v = r[k]
     except (KeyError, IndexError, ValueError, TypeError):
@@ -1280,18 +1321,6 @@ def _prunes_file(f, add: dict) -> bool:
     return False
 
 
-def _live_adds(rows: list, as_of=None) -> dict:
-    """{live path: its winning add action} — the per-file metadata
-    (part values, recorded stats) pruning evaluates against."""
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if as_of is not None and r["commit"] > as_of:
-            continue
-        if r["action"] in ("add", "remove") and r.get("path") is not None:
-            last[r["path"]] = r
-    return {p: r for p, r in last.items() if r["action"] == "add"}
-
-
 #: planning-worker registry: relation id -> (push count, RUNNING
 #: INTERSECTION of every filter-set pushed for that relation, as stable
 #: reprs). Defense against SPARK's shared readInfo (see
@@ -1823,13 +1852,12 @@ class TxlogDescribeReader(DataSourceReader):
 def checkpoint_log(log_dir: str, version: int) -> str:
     """Action-complete log CHECKPOINT, stdlib+pyarrow only (the
     connector's writers run in Spark's Python planning worker, where no
-    SparkSession exists) — the same reconciliation as
-    queries/sinks.txlog_checkpoint: add/remove last-wins per path, dv
-    kept per (sidecar, target), txn markers and metaData rows kept,
-    one commitInfo per commit kept (timestamp resolution and history
-    survive compaction). Writes ONE parquet file named
-    ``_checkpoint_<version>`` carrying every column of the engine's
-    action schema and DELETES the compacted JSON commits. Two racers
+    SparkSession exists; the engine's `txlog_checkpoint` calls it too):
+    add/remove last-wins per path, dv kept per (sidecar, target), txn
+    markers and metaData rows kept, one commitInfo per commit kept
+    (timestamp resolution and history survive compaction). Writes ONE
+    parquet file named ``_checkpoint_<version>`` carrying every column
+    of `_ACTION_FIELDS` and DELETES the compacted JSON commits. Two racers
     checkpointing the same version write identical content from the
     same immutable log prefix — last rename wins, benign."""
     import pyarrow as pa
@@ -1856,35 +1884,12 @@ def checkpoint_log(log_dir: str, version: int) -> str:
             # snapshot-scoped, so enforcement under time travel uses
             # the protocol in force at the travelled-to version
             state[("protocol", r["commit"])] = r
-    cols = [
-        ("commit", pa.int64()),
-        ("action", pa.string()),
-        ("path", pa.string()),
-        ("target", pa.string()),
-        ("constraint", pa.string()),
-        ("part", pa.string()),
-        ("schema", pa.string()),
-        ("ts", pa.int64()),
-        ("op", pa.string()),
-        ("metrics", pa.string()),
-        ("min_key", pa.int64()),
-        ("max_key", pa.int64()),
-        ("part_col", pa.string()),
-        ("stats_col", pa.string()),
-        ("bloom", pa.string()),
-        ("bloom_col", pa.string()),
-        ("bloom_bits", pa.int64()),
-        ("stats_json", pa.string()),
-        ("bytes", pa.int64()),
-        ("rows", pa.int64()),
-        ("protocol", pa.string()),
-        ("tbloom", pa.string()),
-        ("tbloom_col", pa.string()),
-        ("tbloom_bits", pa.int64()),
-    ]
     vals = list(state.values())
     table = pa.table(
-        {n: pa.array([v.get(n) for v in vals], type=t) for n, t in cols}
+        {
+            n: pa.array([v.get(n) for v in vals], type=getattr(pa, t)())
+            for n, t in _ACTION_FIELDS
+        }
     )
     # a DIRECTORY of part files, matching the engine's layout — a bare
     # file named _checkpoint_* would be invisible to Spark readers
@@ -2571,8 +2576,8 @@ class TxlogBatchWriter(DataSourceArrowWriter):
         #: Hive/Delta-style partitioned layout: tasks split their Arrow
         #: batches by this column's value; the commit publishes one
         #: data dir per partition value and one ``part``-valued add
-        #: action each, so partition-pruned reads
-        #: (queries/sinks._txlog_part_live) plan on pure log metadata.
+        #: action each, so partition-pruned reads plan on pure log
+        #: metadata.
         #: Combines with stats_col: each partition's add also records
         #: that partition's exact min/max (partition pruning AND range
         #: pruning from one commit's metadata).

@@ -30,6 +30,19 @@ from aind_data_transformation_spark.ops import attach_broadcast
 from pyspark.sql import types as T
 
 from aind_data_transformation_spark.io.sources import load_table, read_csv, read_json
+from aind_data_transformation_spark.io.txlog_source import (
+    _ACTION_FIELDS,
+    _incremental_files,
+    _live_adds,
+    _live_dvs,
+    _live_files,
+    _log_rows,
+    _mapping_as_of,
+    _version_as_of_ts,
+    attempt_commit,
+    check_protocol,
+    checkpoint_log,
+)
 from aind_data_transformation_spark.stages import Stage
 
 
@@ -756,7 +769,7 @@ def q_sink_txlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-checkpoint tail), so the live set falls out of the standard
     # last-action-per-path replay — identical result to full-log
     # replay, O(checkpoint + tail) metadata cost
-    live = _txlog_live_from_rows(_txlog_log_rows(spark, log_dir))
+    live = _live_files(_txlog_log_rows(spark, log_dir))
     snap = spark.read.parquet(*live)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -880,72 +893,31 @@ def _txlog_log_rows(spark: SparkSession, log_dir: str) -> list:
     # Driver-side replay through the connector's `_log_rows` (stdlib
     # json + pyarrow for checkpoint parquet) — the log is metadata by
     # design, and Delta computes snapshots on the driver for the same
-    # reason. Each call previously launched 1-2 distributed Spark jobs
-    # (spark.read.json(...).collect()) just to fetch a few KB of
-    # actions; with ~45 engine call sites, several per mutating key,
-    # that fixed job cost dominated the txlog family's bench profile.
-    # Rows are normalized to the full action schema (missing field ->
-    # None) so callers keep unconditional r["field"] access, exactly
-    # as the schema'd Spark read returned them. Checkpoint replay
-    # (reconciled state + JSON tail) and the crashed-compaction digit
-    # filter live in `_log_rows` itself — one implementation shared
-    # with the connector, no drift.
-    from aind_data_transformation_spark.io.txlog_source import _log_rows
-
+    # reason; the connector's replay functions (`_live_files`,
+    # `_live_adds`, `_live_dvs`, ...) then turn these rows into table
+    # state. Rows are normalized to the full action schema (missing
+    # field -> None) so callers keep unconditional r["field"] access;
+    # fields beyond it (a fixture's min_cust/max_cust stats) are kept.
     rows = [
-        {f: r.get(f) for f in _TXLOG_ACTION_FIELDS}
+        {**dict.fromkeys(f for f, _ in _ACTION_FIELDS), **r}
         for r in _log_rows(log_dir)
     ]
-    _check_read_protocol(rows)
-    return rows
-
-
-#: every field of the action-log schema (the engine's historical
-#: schema'd-read column set): replayed rows carry all of them, None
-#: when absent from the JSON line / checkpoint column set.
-_TXLOG_ACTION_FIELDS = (
-    "commit", "action", "path", "target", "constraint", "part", "schema",
-    "ts", "op", "metrics", "min_key", "max_key", "part_col", "stats_col",
-    "bloom", "bloom_col", "bloom_bits", "stats_json", "bytes", "rows",
-    "protocol", "tbloom", "tbloom_col", "tbloom_bits",
-)
-
-
-def _check_read_protocol(rows: list) -> None:
-    """Protocol read-gate at the engine's ONE replay entry point: a
-    table whose protocol demands a reader version or feature this
-    code does not implement fails loudly here, covering every engine
-    read AND (since mutators replay before committing) every engine
-    mutation. Write-side feature checks live in the commit primitive
-    (`io/txlog_source.attempt_commit`). Tables without a protocol
-    action pass untouched. Checked at the table HEAD (fail-closed even
-    for time-travel reads — the as_of resolves after replay here); the
-    connector reader scopes the check to the travelled-to snapshot."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        check_protocol,
-    )
-
+    # Protocol read-gate: a table whose protocol demands a reader
+    # version or feature this code does not implement fails here,
+    # covering every engine read AND (since mutators replay before they
+    # write anything) every engine mutation. Write-side feature checks
+    # live in the commit primitive. Checked at the table HEAD
+    # (fail-closed even for time-travel reads, whose as_of resolves
+    # after replay); the connector reader scopes the check to the
+    # travelled-to snapshot.
     check_protocol(rows, "read")
-
-
-def _txlog_live_from_rows(rows: list, as_of=None) -> list:
-    """Replay collected log rows (optionally only commits <= as_of —
-    time travel) to the live file list: last action per path wins, with
-    remove beating add within one commit (matching the
-    max(struct(commit, action)) tie-break: 'remove' > 'add')."""
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if as_of is not None and r["commit"] > as_of:
-            continue
-        if r["action"] in ("add", "remove") and r["path"] is not None:
-            last[r["path"]] = r["action"]
-    return sorted(p for p, a in last.items() if a == "add")
+    return rows
 
 
 def _txlog_live_files(spark: SparkSession, log_dir: str, as_of) -> list:
     """Replay the action log (optionally only commits <= as_of — time
     travel) to the live file list: last action per path wins."""
-    return _txlog_live_from_rows(_txlog_log_rows(spark, log_dir), as_of)
+    return _live_files(_txlog_log_rows(spark, log_dir), as_of)
 
 
 def _txlog_read(spark: SparkSession, log_dir: str, as_of) -> DataFrame:
@@ -992,10 +964,6 @@ def _txlog_attempt_commit(
     which also stamps a ``commitInfo`` provenance action (operation
     name + non-decreasing microsecond timestamp) unless the caller
     supplied its own, powering ``AS OF TIMESTAMP`` and history audit."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        attempt_commit,
-    )
-
     return attempt_commit(
         log_dir,
         version,
@@ -1056,32 +1024,39 @@ def txlog_merge(
     ``{"version", "touched", "added", "attempts", "recomputes"}`` for
     the layout assertions in tests/test_sinks.py."""
     data_cols = [c for c in changes.columns if c != "op"]
-    attempt = 0
-    for recomputes in range(_TXLOG_MAX_RETRIES):
+
+    def applied(rows) -> bool:
         # transactional idempotence (Delta's txn action): a caller that
         # replays the same logical transaction (a foreachBatch
         # micro-batch re-delivered after a crash) passes the same
         # txn_id; if a committed version already carries it, the merge
         # was applied — skip instead of double-applying the change-set.
-        if txn_id is not None and any(
-            r["action"] == "txn" and r["path"] == txn_id
-            for r in _txlog_log_rows(spark, log_dir)
-        ):
-            return {
-                "version": None,
-                "touched": [],
-                "added": None,
-                "attempts": attempt,
-                "recomputes": recomputes,
-                "skipped": txn_id,
-            }
-        # one log read per attempt: BOTH the live set and the attempt
-        # version come from the same collected snapshot, so any commit
-        # landing after this point collides on the version file below
-        # and forces a full revalidating retry (no lost-update window
-        # between "what files are live" and "what version am I").
+        return txn_id is not None and any(
+            r["action"] == "txn" and r["path"] == txn_id for r in rows
+        )
+
+    def skipped() -> dict:
+        return {
+            "version": None,
+            "touched": [],
+            "added": None,
+            "attempts": attempt,
+            "recomputes": recomputes,
+            "skipped": txn_id,
+        }
+
+    attempt = 0
+    for recomputes in range(_TXLOG_MAX_RETRIES):
+        # one log read per attempt: the txn check, the live set and the
+        # attempt version all come from the same collected snapshot, so
+        # any commit landing after this point collides on the version
+        # file below and forces a revalidation (no lost-update window
+        # between "was this applied", "what files are live" and "what
+        # version am I").
         log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
+        if applied(log_rows):
+            return skipped()
+        live = _live_files(log_rows)
         version = max(r["commit"] for r in log_rows) + 1
         # 2. touched files: which live files hold a key the change-set
         # deletes or updates. input_file_name() is a URI over the part
@@ -1166,6 +1141,10 @@ def txlog_merge(
             # seen (>= our attempted version).
             new_rows = _txlog_log_rows(spark, log_dir)
             inter = [r for r in new_rows if r["commit"] >= version]
+            if applied(inter):
+                # a redelivery of this transaction won the race: its
+                # commit already carries our txn marker
+                return skipped()
             inter_removed = {
                 r["path"] for r in inter if r["action"] == "remove"
             }
@@ -1279,7 +1258,7 @@ def txlog_vacuum(
     rows = _txlog_log_rows(spark, log_dir)
     keep: set = set()
     for v in retain_versions:
-        keep.update(_txlog_live_from_rows(rows, as_of=v))
+        keep.update(_live_files(rows, as_of=v))
     ever_added = {
         r["path"] for r in rows if r["action"] == "add"
     }
@@ -1388,7 +1367,7 @@ def txlog_restore(
     rollback: one new commit re-adds the files live at the target
     version and removes the files live now but not then. ``to_ts``
     (microseconds) resolves to the latest commit whose commitInfo
-    timestamp is at or before it (`_txlog_version_as_of_ts` — the same
+    timestamp is at or before it (`_version_as_of_ts`, the same
     resolution AS OF TIMESTAMP reads use), then version rollback takes
     over. No data moves; history is preserved (the bad versions stay
     readable via time travel until vacuumed) — the reason lakehouse
@@ -1401,7 +1380,7 @@ def txlog_restore(
     if (to_version is None) == (to_ts is None):
         raise ValueError("pass exactly one of to_version / to_ts")
     if to_ts is not None:
-        to_version = _txlog_version_as_of_ts(
+        to_version = _version_as_of_ts(
             _txlog_log_rows(spark, log_dir), to_ts
         )
     for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
@@ -1409,8 +1388,8 @@ def txlog_restore(
         # current, and the attempt version all derive from one snapshot
         # so an intervening commit always collides and forces a retry.
         log_rows = _txlog_log_rows(spark, log_dir)
-        target = set(_txlog_live_from_rows(log_rows, as_of=to_version))
-        current = set(_txlog_live_from_rows(log_rows))
+        target = set(_live_files(log_rows, as_of=to_version))
+        current = set(_live_files(log_rows))
         version = max(r["commit"] for r in log_rows) + 1
         re_added = sorted(target - current)
         removed = sorted(current - target)
@@ -1516,7 +1495,7 @@ def txlog_evo_read(spark: SparkSession, log_dir: str):
         (r for r in rows if r["action"] == "metaData"),
         key=lambda r: r["commit"],
     )["schema"]
-    live = _txlog_live_from_rows(rows)
+    live = _live_files(rows)
     snap = spark.read.schema(schema).parquet(*live)
     return snap, schema
 
@@ -1627,12 +1606,7 @@ def txlog_stats_read(
     silently drop every live file whose add survives only in the
     checkpoint. A live file with NO recorded stats is always scanned
     (pruning is a superset guarantee, never a filter)."""
-    rows = _txlog_log_rows(spark, log_dir)
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if r["action"] in ("add", "remove") and r["path"] is not None:
-            last[r["path"]] = r
-    live = [r for r in last.values() if r["action"] == "add"]
+    live = list(_live_adds(_txlog_log_rows(spark, log_dir)).values())
     pruned = sorted(
         r["path"]
         for r in live
@@ -1689,22 +1663,11 @@ def txlog_incremental_files(
     never table size, which is what makes log-backed incremental ETL
     viable on a 100-TB table that grows by 0.1% a day.
 
-    Driver-side log replay (the log is metadata-sized; previously this
-    launched a distributed JSON read + shuffle per consumer poll just
-    to diff a few KB of actions): last action per path wins with the
-    (commit, action) tie-break of max(struct(commit, action)) — the
-    sorted-iteration last-assignment below is exactly that order."""
-    rows = _txlog_log_rows(spark, log_dir)
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if to_version is not None and r["commit"] > to_version:
-            continue
-        if r["path"] is not None:
-            last[r["path"]] = (r["commit"], r["action"])
-    return sorted(
-        p
-        for p, (c, a) in last.items()
-        if a == "add" and c > from_version
+    Driver-side log replay through the connector's
+    `_incremental_files` — the same increment its stream reader serves
+    per micro-batch."""
+    return _incremental_files(
+        _txlog_log_rows(spark, log_dir), from_version, to_version
     )
 
 
@@ -1845,42 +1808,17 @@ def txlog_stats2_read(
     whether a predicate on the SECOND column opens a few quadrant
     directories or every file in the table.
 
-    Driver-side log replay via the connector's `_log_rows` (the raw
-    action dicts — this fixture's adds carry the two-column
-    min_cust/max_cust stats beyond the engine's normalized field set);
-    previously each of the FOUR (layout × predicate) reads per key
-    launched its own distributed JSON read + shuffle over ~35 metadata
-    rows. Last action per path wins with the same (commit, action)
-    tie-break as max(struct(commit, action, ...))."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        _log_rows,
-        check_protocol,
-    )
-
-    rows = _log_rows(log_dir)
-    check_protocol(rows, "read")
+    Driver-side log replay through `_txlog_log_rows`, which keeps this
+    fixture's two-column min_cust/max_cust stats beyond the action
+    schema."""
     mn, mx = (
         ("min_key", "max_key")
         if column == "o_orderkey"
         else ("min_cust", "max_cust")
     )
-    last: dict = {}
-    for r in sorted(
-        rows, key=lambda r: (r["commit"], r["action"] or "")
-    ):
-        if as_of is not None and r["commit"] > as_of:
-            continue
-        if r.get("path") is not None:
-            last[r["path"]] = r
-    live = [
-        (r.get(mn), r.get(mx))
-        for r in last.values()
-        if r["action"] == "add"
-    ]
+    live = _live_adds(_txlog_log_rows(spark, log_dir), as_of)
     pruned = sorted(
-        p
-        for p, r in last.items()
-        if r["action"] == "add" and r.get(mx) >= lo and r.get(mn) <= hi
+        p for p, r in live.items() if r[mx] >= lo and r[mn] <= hi
     )
     snap = spark.read.parquet(*pruned).where(F.col(column).between(lo, hi))
     return snap, len(live), len(pruned)
@@ -1962,27 +1900,6 @@ def q_sink_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _txlog_live_dvs(rows: list, live: list, as_of=None) -> list:
-    """APPLICABLE deletion-vector sidecars: each ``dv`` action records
-    its TARGET data file (the Delta DV-descriptor design), so
-    applicability is pure log metadata — a DV file is read iff at least
-    one of its targets is still live at the requested version. A later
-    OPTIMIZE that rewrites the targets makes the DV inert without a log
-    edit, and VACUUM can physically reclaim an all-targets-dead DV
-    without ever breaking a reader (the reader never lists it)."""
-    live_set = set(live)
-    return sorted(
-        {
-            r["path"]
-            for r in rows
-            if r["action"] == "dv"
-            and r["path"] is not None
-            and r["target"] in live_set
-            and (as_of is None or r["commit"] <= as_of)
-        }
-    )
-
-
 def _src_logged_col(live: list):
     """input_file_name() mapped to the LOGGED add path that owns the
     part file: its parent directory when that parent is itself a live
@@ -2024,7 +1941,7 @@ def txlog_delete_with_dv(
     revalidating retry."""
     for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
         log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
+        live = _live_files(log_rows)
         version = max(r["commit"] for r in log_rows) + 1
         snap = spark.read.parquet(*live).withColumn(
         "_src", _src_logged_col(live)
@@ -2087,8 +2004,10 @@ def txlog_read_with_dvs(
     anti-join broadcasts; the scan itself is unchanged (the read
     amplification IS the MoR tradeoff, reported by the query key)."""
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows, as_of)
-    dvs = _txlog_live_dvs(rows, live, as_of)
+    live = _live_files(rows, as_of)
+    dvs = sorted(
+        {p for ps in _live_dvs(rows, live, as_of).values() for p in ps}
+    )
     snap = spark.read.parquet(*live).withColumn(
         "_src", _src_logged_col(live)
     )
@@ -2116,24 +2035,16 @@ def txlog_dv_materialize(
     bytes, the same copy-on-write bill the DELETE deferred."""
     for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
         log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
-        dvs = _txlog_live_dvs(log_rows, live)
+        live = _live_files(log_rows)
+        by_target = _live_dvs(log_rows, live)
         version = max(r["commit"] for r in log_rows) + 1
-        if not dvs:
+        if not by_target:
             return {"version": None, "rewritten": [], "attempts": attempt}
-        # applicable targets straight from the log metadata (the dv
-        # actions), no sidecar read needed to plan the rewrite
-        live_set = set(live)
-        targets = sorted(
-            {
-                r["target"]
-                for r in log_rows
-                if r["action"] == "dv" and r["target"] in live_set
-            }
-        )
+        # applicable targets and sidecars straight from the log metadata
+        # (the dv actions), no sidecar read needed to plan the rewrite
+        targets = sorted(by_target)
+        dvs = sorted({p for ps in by_target.values() for p in ps})
         dv = spark.read.parquet(*dvs).where(F.col("target").isin(live))
-        if not targets:
-            return {"version": None, "rewritten": [], "attempts": attempt}
         snap = spark.read.parquet(*targets).withColumn(
             "_src", _src_logged_col(targets)
         )
@@ -2187,7 +2098,7 @@ def q_sink_txlog_deletion_vectors(
     )
     txlog_delete_with_dv(spark, log_dir, deletes, "o_orderkey")
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
+    live = _live_files(rows)
     scanned = (
         spark.read.parquet(*live)
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows_scanned"))
@@ -2226,7 +2137,7 @@ def q_sink_txlog_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     txlog_delete_with_dv(spark, log_dir, deletes, "o_orderkey")
     txlog_dv_materialize(spark, log_dir, "o_orderkey")
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
+    live = _live_files(rows)
     snap = spark.read.parquet(*live)
     scanned = snap.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_scanned")
@@ -2460,7 +2371,7 @@ def txlog_update_with_dv(
     data_cols = list(updates.columns)
     for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
         log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
+        live = _live_files(log_rows)
         version = max(r["commit"] for r in log_rows) + 1
         snap = spark.read.parquet(*live).withColumn(
         "_src", _src_logged_col(live)
@@ -2531,7 +2442,7 @@ def q_sink_txlog_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     txlog_update_with_dv(spark, log_dir, updates, "o_orderkey")
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
+    live = _live_files(rows)
     scanned = spark.read.parquet(*live).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_scanned")
     )
@@ -2563,7 +2474,7 @@ def txlog_shallow_clone(
     be pointed at retention sets that would reclaim files the source
     still owns."""
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
+    live = _live_files(rows)
     shutil.rmtree(clone_base, ignore_errors=True)
     clone_log = os.path.join(clone_base, "_log")
     os.makedirs(clone_log, exist_ok=True)
@@ -2629,42 +2540,8 @@ def txlog_checkpoint(spark: SparkSession, log_dir: str, version: int) -> str:
     a table whose protocol demands unimplemented reader features fails
     here before compaction rather than committing a checkpoint its own
     readers cannot replay."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        _log_rows,
-        check_protocol,
-        checkpoint_log,
-    )
-
-    check_protocol(_log_rows(log_dir), "read")
+    _txlog_log_rows(spark, log_dir)
     return checkpoint_log(log_dir, version)
-
-
-def _txlog_rows_checkpointed(
-    spark: SparkSession, log_dir: str, ckpt_dir: str, ckpt_version: int
-) -> list:
-    """The action rows a reader sees on a checkpointed table: the
-    reconciled checkpoint state plus the JSON tail (> ckpt_version) —
-    same shape as `_txlog_log_rows`, O(checkpoint + tail) cost.
-    Driver-side pyarrow read of the checkpoint parquet — metadata, no
-    Spark job."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    ckpt = [
-        {f: r.get(f) for f in ("commit", "action", "path", "target")}
-        for r in _pq.read_table(ckpt_dir).to_pylist()
-    ]
-    # a checkpoint at the head leaves no JSON tail at all — an empty
-    # glob is a valid (fully compacted) state, not an error
-    if not _glob.glob(os.path.join(log_dir, "*.json")):
-        return list(ckpt)
-    tail = [
-        r
-        for r in _txlog_log_rows(spark, log_dir)
-        if r["commit"] > ckpt_version
-    ]
-    return list(ckpt) + tail
 
 
 def q_sink_txlog_checkpoint_mor(
@@ -3389,31 +3266,6 @@ def _build_txlog_part_table(spark: SparkSession, sf_dir: str, name: str):
     return log_dir, data_dir
 
 
-def _txlog_part_log_rows(spark: SparkSession, log_dir: str) -> list:
-    """One driver-side snapshot of a partition-valued action log (the
-    single-read discipline of `_txlog_log_rows`, with ``part`` carried
-    so pruning and conflict checks run on pure metadata). Driver-side
-    stdlib-json replay — no Spark job for a metadata read."""
-    from aind_data_transformation_spark.io.txlog_source import _log_rows
-
-    return [
-        {f: r.get(f) for f in ("commit", "action", "path", "part")}
-        for r in _log_rows(log_dir)
-    ]
-
-
-def _txlog_part_live(rows: list) -> list:
-    """Live (path, part) pairs from a partition-valued log snapshot —
-    last action per path wins."""
-    last = {}
-    for r in sorted(rows, key=lambda r: r["commit"]):
-        if r["action"] in ("add", "remove") and r["path"] is not None:
-            last[r["path"]] = (r["action"], r["part"])
-    return sorted(
-        (p, meta[1]) for p, meta in last.items() if meta[0] == "add"
-    )
-
-
 def txlog_replace_where(
     spark: SparkSession,
     log_dir: str,
@@ -3443,7 +3295,7 @@ def txlog_replace_where(
     disjoint date partitions all land on their first write either way."""
     import uuid as _uuid
 
-    rows = _txlog_part_log_rows(spark, log_dir)
+    rows = _txlog_log_rows(spark, log_dir)
     new_path = os.path.join(
         os.path.dirname(log_dir),
         "data",
@@ -3455,9 +3307,9 @@ def txlog_replace_where(
     while attempts < _TXLOG_MAX_RETRIES:
         attempts += 1
         version = max((r["commit"] for r in rows), default=-1) + 1
-        victims = [
-            p for p, part in _txlog_part_live(rows) if part == part_value
-        ]
+        victims = sorted(
+            p for p, a in _live_adds(rows).items() if a["part"] == part_value
+        )
         actions = [
             {
                 "commit": version,
@@ -3481,7 +3333,7 @@ def txlog_replace_where(
                 "recomputes": recomputes,
                 "n_removed": len(victims),
             }
-        fresh = _txlog_part_log_rows(spark, log_dir)
+        fresh = _txlog_log_rows(spark, log_dir)
         touched = {
             r["part"]
             for r in fresh
@@ -3518,10 +3370,10 @@ def q_sink_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 2 == 0)
     )
     txlog_replace_where(spark, log_dir, "O", replacement)
-    live = _txlog_part_live(_txlog_part_log_rows(spark, log_dir))
-    pruned = [p for p, part in live if part == "O"]
+    live = _live_adds(_txlog_log_rows(spark, log_dir))
+    pruned = sorted(p for p, a in live.items() if a["part"] == "O")
     o_scan_rows = spark.read.parquet(*pruned).count()
-    snap = spark.read.parquet(*[p for p, _ in live])
+    snap = spark.read.parquet(*sorted(live))
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
@@ -3969,27 +3821,6 @@ ORACLES["scan_txlog_datasource_mor"] = """
 """
 
 
-def _txlog_version_as_of_ts(rows: list, ts_us: int) -> int:
-    """``AS OF TIMESTAMP`` resolution: the latest commit whose
-    commitInfo timestamp is at or before ``ts_us`` (Delta's rule).
-    Well-defined because `attempt_commit` clamps commit timestamps to
-    be non-decreasing. Pure metadata — resolves over collected log
-    rows, then version time travel takes over."""
-    cand = [
-        r["commit"]
-        for r in rows
-        if r["action"] == "commitInfo"
-        and r["ts"] is not None
-        and r["ts"] <= ts_us
-    ]
-    if not cand:
-        raise ValueError(
-            f"no commit at or before timestamp {ts_us}; table history "
-            "begins later"
-        )
-    return max(cand)
-
-
 def _build_txlog_table_with_delete(
     spark: SparkSession, sf_dir: str, name: str
 ) -> str:
@@ -4000,7 +3831,7 @@ def _build_txlog_table_with_delete(
     log_dir = _build_txlog_table(spark, sf_dir, name)
     rows = _txlog_log_rows(spark, log_dir)
     b0 = next(
-        p for p in _txlog_live_from_rows(rows) if p.endswith("batch-0")
+        p for p in _live_files(rows) if p.endswith("batch-0")
     )
     ok = _txlog_attempt_commit(
         log_dir,
@@ -4043,7 +3874,7 @@ def q_sink_txlog_time_travel_ts(
     ]
     out = None
     for label, ts in probes:
-        v = _txlog_version_as_of_ts(rows, ts)
+        v = _version_as_of_ts(rows, ts)
         df = (
             _txlog_read(spark, log_dir, as_of=v)
             .withColumn("probe", F.lit(label))
@@ -4273,35 +4104,32 @@ ORACLES["sink_txlog_datasource_write"] = """
 # ---------------------------------------------------------------------------
 
 
-def _txlog_mapping_latest(rows: list) -> dict:
-    """The CURRENT column mapping: latest metaData action whose schema
-    payload is a mapping document (JSON object), parsed. Plain-DDL
-    metaData rows (the additive-evolution keys) are not mappings."""
-    import json as _json
-
-    cand = [
-        r
-        for r in rows
-        if r["action"] == "metaData"
-        and r["schema"]
-        and r["schema"].lstrip().startswith("{")
-    ]
-    if not cand:
+def _txlog_mapped_rows(spark: SparkSession, log_dir: str) -> tuple:
+    """One replay of a column-mapped table: (action rows, the mapping
+    in force at the head). Plain-DDL metaData rows (the
+    additive-evolution keys) are not mappings."""
+    rows = _txlog_log_rows(spark, log_dir)
+    m = _mapping_as_of(rows)
+    if m is None:
         raise ValueError("table has no column-mapping metaData")
-    return _json.loads(max(cand, key=lambda r: r["commit"])["schema"])
+    return rows, m
 
 
 def _txlog_commit_metadata(
-    spark: SparkSession, log_dir: str, mapping: dict, op: str
+    spark: SparkSession, log_dir: str, edit, op: str
 ) -> int:
     """Metadata-ONLY commit (no add/remove): the whole point of column
-    mapping — schema surgery is one log action at any table size."""
+    mapping — schema surgery is one log action at any table size.
+    ``edit(columns, version)`` returns the new column list; each
+    attempt applies it to the mapping of the same replay it commits
+    against, so a lost race re-edits the winner's mapping instead of
+    overwriting it with one derived from a stale snapshot."""
     import json as _json
 
-    payload = _json.dumps(mapping, sort_keys=True)
     for _ in range(_TXLOG_MAX_RETRIES):
-        rows = _txlog_log_rows(spark, log_dir)
+        rows, m = _txlog_mapped_rows(spark, log_dir)
         version = max(r["commit"] for r in rows) + 1
+        cols = edit([dict(c) for c in m["columns"]], version)
         if _txlog_attempt_commit(
             log_dir,
             version,
@@ -4309,7 +4137,7 @@ def _txlog_commit_metadata(
                 {
                     "commit": version,
                     "action": "metaData",
-                    "schema": payload,
+                    "schema": _json.dumps({"columns": cols}, sort_keys=True),
                 }
             ],
             op=op,
@@ -4325,30 +4153,31 @@ def txlog_rename_column(
 ) -> int:
     """ALTER TABLE RENAME COLUMN — logical name changes, physical name
     (what the parquet files store) stays; ZERO data files touched."""
-    m = _txlog_mapping_latest(_txlog_log_rows(spark, log_dir))
-    cols = [dict(c) for c in m["columns"]]
-    if not any(c["name"] == old for c in cols):
-        raise ValueError(f"no such column: {old}")
-    if any(c["name"] == new for c in cols):
-        raise ValueError(f"column exists: {new}")
-    for c in cols:
-        if c["name"] == old:
-            c["name"] = new
-    return _txlog_commit_metadata(
-        spark, log_dir, {"columns": cols}, op="RENAME COLUMN"
-    )
+
+    def edit(cols, _version):
+        if not any(c["name"] == old for c in cols):
+            raise ValueError(f"no such column: {old}")
+        if any(c["name"] == new for c in cols):
+            raise ValueError(f"column exists: {new}")
+        for c in cols:
+            if c["name"] == old:
+                c["name"] = new
+        return cols
+
+    return _txlog_commit_metadata(spark, log_dir, edit, op="RENAME COLUMN")
 
 
 def txlog_drop_column(spark: SparkSession, log_dir: str, name: str) -> int:
     """ALTER TABLE DROP COLUMN — the mapping entry goes away; the
     physical column stays in old files, unreadable (soft drop)."""
-    m = _txlog_mapping_latest(_txlog_log_rows(spark, log_dir))
-    cols = [dict(c) for c in m["columns"] if c["name"] != name]
-    if len(cols) == len(m["columns"]):
-        raise ValueError(f"no such column: {name}")
-    return _txlog_commit_metadata(
-        spark, log_dir, {"columns": cols}, op="DROP COLUMN"
-    )
+
+    def edit(cols, _version):
+        kept = [c for c in cols if c["name"] != name]
+        if len(kept) == len(cols):
+            raise ValueError(f"no such column: {name}")
+        return kept
+
+    return _txlog_commit_metadata(spark, log_dir, edit, op="DROP COLUMN")
 
 
 def txlog_add_column(
@@ -4359,18 +4188,15 @@ def txlog_add_column(
     re-adding a previously dropped name can never resurrect the old
     physical column's bytes: old files simply lack the new physical
     name and surface NULL."""
-    rows = _txlog_log_rows(spark, log_dir)
-    m = _txlog_mapping_latest(rows)
-    cols = [dict(c) for c in m["columns"]]
-    if any(c["name"] == name for c in cols):
-        raise ValueError(f"column exists: {name}")
-    version = max(r["commit"] for r in rows) + 1
-    cols.append(
-        {"name": name, "physical": f"{name}__v{version}", "type": dtype}
-    )
-    return _txlog_commit_metadata(
-        spark, log_dir, {"columns": cols}, op="ADD COLUMN"
-    )
+
+    def edit(cols, version):
+        if any(c["name"] == name for c in cols):
+            raise ValueError(f"column exists: {name}")
+        return cols + [
+            {"name": name, "physical": f"{name}__v{version}", "type": dtype}
+        ]
+
+    return _txlog_commit_metadata(spark, log_dir, edit, op="ADD COLUMN")
 
 
 def txlog_mapped_read(spark: SparkSession, log_dir: str) -> DataFrame:
@@ -4378,9 +4204,8 @@ def txlog_mapped_read(spark: SparkSession, log_dir: str) -> DataFrame:
     the PHYSICAL schema (a file missing a physical column — written
     before an ADD — surfaces NULL, Spark's missing-column fill), then
     project physical -> logical. One scan, no per-file branching."""
-    rows = _txlog_log_rows(spark, log_dir)
-    m = _txlog_mapping_latest(rows)
-    live = _txlog_live_from_rows(rows)
+    rows, m = _txlog_mapped_rows(spark, log_dir)
+    live = _live_files(rows)
     phys_ddl = ", ".join(
         f"`{c['physical']}` {c['type']}" for c in m["columns"]
     )
@@ -4396,8 +4221,7 @@ def txlog_mapped_write(
     """Append a file under the CURRENT mapping: logical columns renamed
     to their physical names at write time — the invariant that makes
     rename/drop free is that files never contain logical names."""
-    rows = _txlog_log_rows(spark, log_dir)
-    m = _txlog_mapping_latest(rows)
+    rows, m = _txlog_mapped_rows(spark, log_dir)
     version = max(r["commit"] for r in rows) + 1
     path = os.path.join(
         os.path.dirname(log_dir), "data", f"{file_tag}-{version:05d}"
@@ -4732,7 +4556,7 @@ def txlog_export_manifests(
     rows = _txlog_log_rows(spark, log_dir)
     if version is None:
         version = max(r["commit"] for r in rows)
-    live = _txlog_live_from_rows(rows, as_of=version)
+    live = _live_files(rows, as_of=version)
     os.makedirs(meta_dir, exist_ok=True)
     entries = []
     n_footers = 0
@@ -5362,8 +5186,8 @@ def q_sink_txlog_datasource_write_partitioned(
         .option("partition_col", "o_orderstatus")
         .save(log_dir)
     )
-    pairs = _txlog_part_live(_txlog_part_log_rows(spark, log_dir))
-    opened = sorted(p for p, v in pairs if v == "F")
+    live = _live_adds(_txlog_log_rows(spark, log_dir))
+    opened = sorted(p for p, a in live.items() if a["part"] == "F")
     # read back through the CONNECTOR: Spark pushes the partition
     # filter into the reader (pushFilters), which prunes the other
     # partitions' dirs at planning time — end-to-end partition
@@ -5375,7 +5199,7 @@ def q_sink_txlog_datasource_write_partitioned(
         .where(F.col("o_orderstatus") == "F")
     )
     return snap.agg(
-        F.lit(len(pairs)).cast("long").alias("n_parts_live"),
+        F.lit(len(live)).cast("long").alias("n_parts_live"),
         F.lit(len(opened)).cast("long").alias("n_parts_opened"),
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
@@ -5634,7 +5458,7 @@ def q_sink_txlog_datasource_write_part_stats(
         ]
     )
     n_scanned = len({p.data_dir for p in rdr.partitions()})
-    n_live = len(_txlog_live_from_rows(_txlog_log_rows(spark, log_dir)))
+    n_live = len(_live_files(_txlog_log_rows(spark, log_dir)))
     snap = (
         spark.read.format("txlog")
         .option("path", log_dir)
@@ -6101,7 +5925,7 @@ def q_sink_txlog_partition_evolution(
         rdr.pushFilters([filt])
         return len({p.data_dir for p in rdr.partitions()})
 
-    n_live = len(_txlog_live_from_rows(_txlog_log_rows(spark, log_dir)))
+    n_live = len(_live_files(_txlog_log_rows(spark, log_dir)))
     n_status = scanned(EqualTo(("o_orderstatus",), "F"))
     n_kmod = scanned(EqualTo(("kmod",), "1"))
     tbl = spark.read.format("txlog").option("path", log_dir).load()
@@ -6359,7 +6183,6 @@ def q_sink_txlog_text_bloom_prune(
     layout arithmetic."""
     from aind_data_transformation_spark.io.txlog_source import (
         TxlogBatchReader,
-        _log_rows,
         register,
     )
 

@@ -643,7 +643,10 @@ def incremental_minhash_dedup_ingest(
     stream drains, ``read_stream_dedup_pairs`` equals the batch
     `dedup_fuzzy_minhash` pair set over the same documents — every pair
     involves exactly one earliest-arriving side, so no pair can be
-    emitted twice across batches.
+    emitted twice across batches. Within one batch it can: each
+    batch's pair partition may hold duplicate pairs, so read the pairs
+    through ``read_stream_dedup_pairs`` (which de-duplicates them),
+    never straight from ``pairs_dir``.
 
     Scale: the signature store is ~40 bytes/doc (orders of magnitude
     smaller than the corpus); the band join is the only shuffle; at

@@ -9,6 +9,7 @@ import os
 
 from tests.conftest import TEST_SF_DIR
 
+from aind_data_transformation_spark.io import txlog_source
 from aind_data_transformation_spark.queries import sinks
 
 
@@ -287,6 +288,56 @@ def test_txlog_merge_insert_only_changeset(spark):
     assert post["n_rows"].sum() == pre["n_rows"].sum() + n_ins
 
 
+def test_txlog_merge_txn_redelivery_winning_race_is_skipped(
+    spark, monkeypatch
+):
+    """A redelivery of the same insert-only change-set under the same
+    txn_id wins the commit race between this merge's snapshot and its
+    commit. The cheap re-commit path must find the winner's txn marker
+    among the intervening commits and skip: one marker, the change-set
+    applied once."""
+    from pyspark.sql import functions as F
+
+    from aind_data_transformation_spark.io.sources import load_table
+
+    log_dir = sinks._build_txlog_table(spark, TEST_SF_DIR, "txlog_txn_race")
+    k = F.col("o_orderkey")
+    inserts = (
+        load_table(spark, TEST_SF_DIR, "orders")
+        .where((k % 4 == 1) & (k % 7 == 0))
+        .withColumn("o_orderkey", (k + 100000000).cast("long"))
+        .withColumn("op", F.lit("I"))
+    )
+    real = sinks._txlog_attempt_commit
+    state = {"injected": False}
+
+    def racy(log_dir_, version, actions, **kw):
+        if not state["injected"]:
+            state["injected"] = True
+            won = sinks.txlog_merge(
+                spark, log_dir_, inserts, "o_orderkey", txn_id="redeliver:1"
+            )
+            assert won["version"] == version
+        return real(log_dir_, version, actions, **kw)
+
+    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    res = sinks.txlog_merge(
+        spark, log_dir, inserts, "o_orderkey", txn_id="redeliver:1"
+    )
+    monkeypatch.setattr(sinks, "_txlog_attempt_commit", real)
+    assert res["skipped"] == "redeliver:1"
+    assert res["version"] is None
+    rows = sinks._txlog_log_rows(spark, log_dir)
+    assert [r["path"] for r in rows if r["action"] == "txn"] == [
+        "redeliver:1"
+    ]
+    live = txlog_source._live_files(rows)
+    n_inserted = (
+        spark.read.parquet(*live).where(k >= 100000000).count()
+    )
+    assert n_inserted == inserts.count() > 0
+
+
 def test_txlog_dv_delete_is_merge_on_read(spark):
     """The MoR contract beyond the row oracle — the INVERSE of the CoW
     layout test: (1) a DV DELETE rewrites NO data file (every batch
@@ -541,7 +592,10 @@ def test_txlog_checkpoint_preserves_dv_and_txn_actions(spark):
     before = sinks._txlog_log_rows(spark, log_dir)
     head = max(r["commit"] for r in before)
     ckpt = sinks.txlog_checkpoint(spark, log_dir, head)
-    after = sinks._txlog_rows_checkpointed(spark, log_dir, ckpt, head)
+    # every commit is compacted: the engine replay reads the checkpoint
+    assert os.path.isdir(ckpt)
+    assert not glob.glob(os.path.join(log_dir, "*.json"))
+    after = sinks._txlog_log_rows(spark, log_dir)
 
     def pairs(rows, action):
         return {
@@ -551,13 +605,13 @@ def test_txlog_checkpoint_preserves_dv_and_txn_actions(spark):
     assert pairs(after, "dv") == pairs(before, "dv") != set()
     assert {r["path"] for r in after if r["action"] == "txn"} == {"unit:1"}
     # the reconstructed live set matches the pre-checkpoint one
-    assert sinks._txlog_live_from_rows(after) == sinks._txlog_live_from_rows(
+    assert txlog_source._live_files(after) == txlog_source._live_files(
         before
     )
     # and the DV-aware read still hides the deleted rows
-    live = sinks._txlog_live_from_rows(after)
-    dvs = sinks._txlog_live_dvs(after, live)
-    assert dvs == [res["dv"]]
+    live = txlog_source._live_files(after)
+    dvs = txlog_source._live_dvs(after, live)
+    assert dvs == {t: [res["dv"]] for t in res["targets"]} != {}
 
 
 def test_txlog_attempt_commit_is_put_if_absent(spark):
@@ -1203,12 +1257,36 @@ def test_txlog_replace_where_is_partition_scoped(spark):
     )
 
     # time travel: AS OF version 0 still sees the full 'O' partition
-    rows0 = sinks._txlog_part_log_rows(spark, log_dir)
-    live0 = sinks._txlog_part_live([r for r in rows0 if r["commit"] <= 0])
-    o_files0 = [p for p, part in live0 if part == "O"]
+    rows0 = sinks._txlog_log_rows(spark, log_dir)
+    live0 = txlog_source._live_adds(rows0, as_of=0)
+    o_files0 = [p for p, a in live0.items() if a["part"] == "O"]
     n0 = spark.read.parquet(*o_files0).count()
     want0 = orders.where(F.col("o_orderstatus") == "O").count()
     assert n0 == want0
+
+
+def test_txlog_replace_where_is_read_gated_before_writing(spark):
+    """A table whose protocol demands an unknown reader feature refuses
+    replaceWhere before any data is written: no replacement directory
+    under data/, and the log head is unchanged."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from aind_data_transformation_spark.io.sources import load_table
+
+    log_dir, data_dir = sinks._build_txlog_part_table(
+        spark, TEST_SF_DIR, "txlog_rw_gate_test"
+    )
+    txlog_source.set_protocol(log_dir, reader_features=["future_feature"])
+    data_before = sorted(os.listdir(data_dir))
+    log_before = sorted(os.listdir(log_dir))
+    repl = load_table(spark, TEST_SF_DIR, "orders").where(
+        F.col("o_orderstatus") == "O"
+    )
+    with pytest.raises(txlog_source.TxlogProtocolError, match="reader feature"):
+        sinks.txlog_replace_where(spark, log_dir, "O", repl)
+    assert sorted(os.listdir(data_dir)) == data_before
+    assert sorted(os.listdir(log_dir)) == log_before
 
 
 def test_txlog_replace_where_disjoint_partitions_skip_recompute(
@@ -1248,12 +1326,12 @@ def test_txlog_replace_where_disjoint_partitions_skip_recompute(
     assert res_a["attempts"] == 2
     assert res_a["recomputes"] == 0, "disjoint partitions must not recompute"
 
-    live = sinks._txlog_part_live(sinks._txlog_part_log_rows(spark, log_dir))
+    live = txlog_source._live_adds(sinks._txlog_log_rows(spark, log_dir))
     o_rows = spark.read.parquet(
-        *[p for p, part in live if part == "O"]
+        *[p for p, a in live.items() if a["part"] == "O"]
     ).count()
     f_rows = spark.read.parquet(
-        *[p for p, part in live if part == "F"]
+        *[p for p, a in live.items() if a["part"] == "F"]
     ).count()
     assert o_rows == repl_o.count()
     assert f_rows == repl_f.count()
@@ -1904,16 +1982,16 @@ def test_txlog_as_of_timestamp_resolution(spark):
     )
     rows = sinks._txlog_log_rows(spark, log_dir)
     t0 = sinks._TXLOG_TS0
-    assert sinks._txlog_version_as_of_ts(rows, t0) == 0  # inclusive
-    assert sinks._txlog_version_as_of_ts(rows, t0 + 59_999_999) == 0
-    assert sinks._txlog_version_as_of_ts(rows, t0 + 60_000_000) == 1
-    assert sinks._txlog_version_as_of_ts(rows, t0 + 10**12) == 3
+    assert txlog_source._version_as_of_ts(rows, t0) == 0  # inclusive
+    assert txlog_source._version_as_of_ts(rows, t0 + 59_999_999) == 0
+    assert txlog_source._version_as_of_ts(rows, t0 + 60_000_000) == 1
+    assert txlog_source._version_as_of_ts(rows, t0 + 10**12) == 3
     with pytest.raises(ValueError, match="history begins later"):
-        sinks._txlog_version_as_of_ts(rows, t0 - 1)
+        txlog_source._version_as_of_ts(rows, t0 - 1)
 
     sinks.txlog_checkpoint(spark, log_dir, 3)
     rows2 = sinks._txlog_log_rows(spark, log_dir)
-    assert sinks._txlog_version_as_of_ts(rows2, t0 + 10**12) == 3
+    assert txlog_source._version_as_of_ts(rows2, t0 + 10**12) == 3
     assert {
         r["commit"] for r in rows2 if r["action"] == "commitInfo"
     } == {0, 1, 2, 3}
@@ -2020,7 +2098,7 @@ def test_txlog_column_mapping_never_rewrites(spark):
     ).collect()[0]
     assert got["n_price"] == snap.count() and got["n_cust"] == 0
 
-    m = sinks._txlog_mapping_latest(sinks._txlog_log_rows(spark, log_dir))
+    _, m = sinks._txlog_mapped_rows(spark, log_dir)
     recust = next(c for c in m["columns"] if c["name"] == "o_custkey")
     assert recust["physical"] == f"o_custkey__v{v3}"
 
@@ -2032,6 +2110,34 @@ def test_txlog_column_mapping_never_rewrites(spark):
         sinks.txlog_add_column(spark, log_dir, "price", "double")
     with pytest.raises(ValueError, match="no such column"):
         sinks.txlog_drop_column(spark, log_dir, "nope")
+
+
+def test_txlog_alter_column_race_keeps_the_winners_edit(
+    spark, monkeypatch
+):
+    """A concurrent DROP COLUMN lands between RENAME COLUMN's mapping
+    read and its commit. The rename must re-apply itself to the
+    winner's mapping: the dropped column stays dropped."""
+    log_dir = sinks._build_txlog_mapped_table(
+        spark, TEST_SF_DIR, "txlog_alter_race_test"
+    )
+    real = sinks._txlog_attempt_commit
+    state = {"injected": False}
+
+    def racy(log_dir_, version, actions, **kw):
+        if not state["injected"]:
+            state["injected"] = True
+            assert sinks.txlog_drop_column(spark, log_dir_, "price") == version
+        return real(log_dir_, version, actions, **kw)
+
+    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    v = sinks.txlog_rename_column(spark, log_dir, "o_orderstatus", "status")
+    monkeypatch.setattr(sinks, "_txlog_attempt_commit", real)
+    assert state["injected"]
+    assert max(r["commit"] for r in sinks._txlog_log_rows(spark, log_dir)) == v
+    assert sinks.txlog_mapped_read(spark, log_dir).columns == [
+        "o_orderkey", "status", "o_custkey"
+    ]
 
 
 def test_rowgroup_skipping_layout_and_complement(spark):
@@ -2334,8 +2440,11 @@ def test_txlog_ds_writer_partitioned_layout(spark):
         .option("partition_col", "o_orderstatus")
         .save(log_dir)
     )
-    pairs = sinks._txlog_part_live(
-        sinks._txlog_part_log_rows(spark, log_dir)
+    pairs = sorted(
+        (p, a["part"])
+        for p, a in txlog_source._live_adds(
+            sinks._txlog_log_rows(spark, log_dir)
+        ).items()
     )
     assert sorted(v for _, v in pairs) == ["F", "O", "P"]
     total = 0
@@ -3220,12 +3329,12 @@ def test_txlog_checkpoint_twins_inverse_direction(spark):
     rows_after = sinks._txlog_log_rows(spark, log_dir)
     # the RECONCILED state the readers consume survives compaction:
     # live files, applicable DV (sidecar, target) pairs, provenance
-    assert sinks._txlog_live_from_rows(
+    assert txlog_source._live_files(
         rows_after
-    ) == sinks._txlog_live_from_rows(rows_before)
+    ) == txlog_source._live_files(rows_before)
 
     def live_dvs(rows):
-        live = sinks._txlog_live_from_rows(rows)
+        live = txlog_source._live_files(rows)
         return {
             (r["path"], r["target"])
             for r in rows
